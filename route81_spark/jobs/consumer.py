@@ -12,12 +12,14 @@ batch — the reference gets this from per-partition consumption order.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import os
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from route81_spark.config import ConsumerSpec
-from route81_spark.model.schemas import decode_envelope
+from route81_spark.model.schemas import RECORD_SCHEMA, STREAM_DIR, decode_envelope, oplog_seq
 from route81_spark.sinks.classify import ClassifierConfig, classify
 from route81_spark.sinks.merge import KeyedParquetTable
 
@@ -88,26 +90,23 @@ def apply_consumer_batch(
     return {"success": int(counts["total"] - counts["failed"]), "failed": int(counts["failed"])}
 
 
-def topic_source(
-    spark: SparkSession,
-    cfg,
-    spec: ConsumerSpec,
-    sink_dir: str,
-    record_schema: T.StructType,
-) -> DataFrame:
-    """Consumer source selection (P12): with a configured `kafka`
-    bootstrap string, the real format("kafka") subscription (earliest
-    offsets + headers, group parallelism ≡ topic partitions,
-    route81.go:1146-1175); without one, a file stream over the parquet
-    'topic' directory the producer wrote — identical record schema."""
-    if getattr(cfg, "kafka_servers", ""):
+def topic_source(spark: SparkSession, cfg, spec: ConsumerSpec, sink_dir: str | None) -> DataFrame:
+    """The consumer's record stream (P12), with the per-key order as
+    `seq`. With a configured `kafka` bootstrap string: the real
+    format("kafka") subscription (earliest offsets + headers, group
+    parallelism ≡ topic partitions, route81.go:1146-1175), seq = offset.
+    Without one: the parquet loopback under `sink_dir`, which stands in
+    for one cluster — the batch `topic=<t>` partitions plus the
+    change-stream query's output, read through its commit log — kept to
+    the subscribed topics, seq = the envelope's oplog timestamp."""
+    if cfg.kafka_servers:
         from route81_spark.config import kafka_sink_options
 
         reader = (
             spark.readStream.format("kafka")
             .option("kafka.bootstrap.servers", cfg.kafka_servers)
             .option("subscribe", ",".join(spec.kafka_topics))
-            .option("startingOffsets", "earliest")
+            .option("startingOffsets", "earliest")  # route81.go:1150
             .option("includeHeaders", "true")
             .option("kafka.group.id", spec.group_id)
             # bulk-size x workers bounds one flush cycle's records
@@ -116,8 +115,17 @@ def topic_source(
         )
         for k, v in kafka_sink_options(cfg).items():
             reader = reader.option(k, v)
-        return reader.load()
-    return spark.readStream.schema(record_schema).parquet(sink_dir)
+        return reader.load().withColumn("seq", F.col("offset"))
+    records = None
+    for path in (sink_dir, os.path.join(sink_dir, STREAM_DIR)):
+        # a file stream source needs its directory to exist; the
+        # producer may not have started yet
+        os.makedirs(path, exist_ok=True)
+        part = spark.readStream.schema(RECORD_SCHEMA).parquet(path)
+        records = part if records is None else records.unionByName(part)
+    return records.filter(F.col("topic").isin(spec.kafka_topics)).withColumn(
+        "seq", oplog_seq(F.col("value"))
+    )
 
 
 def consumer_sink(spark: SparkSession, cfg, spec: ConsumerSpec, tables_out: str | None):
@@ -129,8 +137,6 @@ def consumer_sink(spark: SparkSession, cfg, spec: ConsumerSpec, tables_out: str 
         from route81_spark.sources.mongo import MongoKeyedSink
 
         return MongoKeyedSink(cfg, spec.mongo_namespace, bulk_size=spec.bulk_size)
-    import os
-
     return KeyedParquetTable(spark, os.path.join(tables_out, spec.mongo_namespace))
 
 

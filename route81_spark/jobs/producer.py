@@ -6,11 +6,12 @@ Spark jobs around the pure-Column core:
   * direct_read_job — batch: read table -> (direct pipeline) -> envelope
     with op suppressed -> kafka-shaped records (route81.go:1376-1381;
     README.md:228-234). `exit-after-direct-reads` ≡ the batch job ends.
-  * streaming_producer_job — readStream of change events -> namespace
-    filter (feedback-loop prevention, route81.go:163-179) -> (stream
-    pipeline) -> envelope with op codes + updates -> writeStream with
-    checkpointLocation (≡ the resume timestamp, route81.go:833-875) and
-    observe() counters (≡ stats, route81.go:488-679).
+  * streaming_producer_job — readStream of every change-stream
+    namespace -> namespace filter (feedback-loop prevention,
+    route81.go:163-179) -> observe() counters (≡ stats,
+    route81.go:488-679) -> (stream pipeline) -> envelope with op codes +
+    updates -> one writeStream with one checkpointLocation (≡ the
+    resume timestamp, route81.go:833-875).
 
 The Kafka sink is pluggable: format("kafka") when a broker exists, a
 parquet "topic directory" for the harness — the record schema
@@ -19,11 +20,14 @@ parquet "topic directory" for the harness — the record schema
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from route81_spark.config import Config
 from route81_spark.envelope import EnvelopeConfig, ProducerMap, build_envelope, route_topic
+from route81_spark.model.schemas import STREAM_DIR, change_event_schema
 from route81_spark.pipeline import apply_pipeline
 from route81_spark.sources.direct_read import direct_read
 
@@ -76,19 +80,23 @@ def change_stream_source(
     """Change-stream source selection (P1): a configured `mongo` URI
     selects the connector change stream (fullDocument updateLookup,
     README.md:303-304); empty keeps the harness change-event JSON dir
-    with a declared schema."""
+    `events_dir/<namespace>` with a declared schema — `doc_schema`, or
+    the fullDocument shape sampled from the files already there."""
     if cfg.mongo_uri:
         from route81_spark.sources import mongo as mongo_seam
 
         return mongo_seam.mongo_stream_reader(spark, cfg, namespace).load()
-    import os
+    from pyspark.sql import types as T
 
-    from route81_spark.model.schemas import change_event_schema
-
-    return (
-        spark.readStream.schema(change_event_schema(doc_schema))
-        .json(os.path.join(events_dir, namespace))
-    )
+    path = os.path.join(events_dir, namespace)
+    if doc_schema is None:
+        sample = spark.read.json(path)
+        doc_schema = (
+            sample.schema["fullDocument"].dataType
+            if "fullDocument" in sample.columns
+            else T.StructType([])
+        )
+    return spark.readStream.schema(change_event_schema(doc_schema)).json(path)
 
 
 def direct_read_job(
@@ -220,32 +228,10 @@ def envelope_change_stream(events: DataFrame, namespace: str, cfg: Config) -> Da
     return doc_records.unionByName(cmd_records)
 
 
-def streaming_producer_multi(
-    spark: SparkSession,
-    cfg: Config,
-    event_streams: dict[str, DataFrame],
-    sink_dir: str,
-    checkpoint_dir: str,
-    trigger_seconds: float = 1.0,
-):
-    """All change-stream namespaces through ONE streaming query — the
-    reference funnels every namespace into a single producer loop with a
-    single resume timestamp (route81.go:1224-1234); one query = one
-    checkpoint preserves that recovery model. Per-namespace pipelines
-    apply before the union; records carry their routed topic."""
-    unioned: DataFrame | None = None
-    for ns, stream in event_streams.items():
-        records = envelope_change_stream(stream, ns, cfg)
-        unioned = records if unioned is None else unioned.unionByName(records)
-    if unioned is None:
-        raise ValueError("no change-stream namespaces configured")
-    return _start_topic_sink(unioned, cfg, sink_dir, checkpoint_dir, trigger_seconds)
-
-
 def _start_topic_sink(
     records: DataFrame,
     cfg: Config,
-    sink_dir: str,
+    sink_dir: str | None,
     checkpoint_dir: str,
     trigger_seconds: float,
 ):
@@ -253,7 +239,7 @@ def _start_topic_sink(
     Kafka sink schema (key/value binary, topic string, headers array),
     so with a configured `kafka` bootstrap string this is the real
     format("kafka") producer; without one (the harness) the same rows
-    land in a parquet 'topic' directory."""
+    land in the loopback's STREAM_DIR under `sink_dir`."""
     writer = records.writeStream
     if cfg.kafka_servers:
         from route81_spark.config import kafka_sink_options
@@ -266,7 +252,7 @@ def _start_topic_sink(
         for k, v in kafka_sink_options(cfg).items():
             writer = writer.option(k, v)
     else:
-        writer = writer.format("parquet").option("path", sink_dir)
+        writer = writer.format("parquet").option("path", os.path.join(sink_dir, STREAM_DIR))
     return (
         writer.option("checkpointLocation", checkpoint_dir)
         .trigger(processingTime=f"{trigger_seconds} seconds")
@@ -277,24 +263,36 @@ def _start_topic_sink(
 def streaming_producer_job(
     spark: SparkSession,
     cfg: Config,
-    event_stream: DataFrame,
-    namespace: str,
-    sink_dir: str,
+    event_streams: dict[str, DataFrame],
+    sink_dir: str | None,
     checkpoint_dir: str,
     trigger_seconds: float = 1.0,
 ):
-    """Wire a change-event stream through the producer path into a
-    parquet topic sink. Returns the StreamingQuery. The observe()
-    metrics mirror the reference's per-op counters (route81.go:621-679)."""
-    observed = event_stream.observe(
-        "producer_stats",
-        F.count(F.lit(1)).alias("queued"),
-        F.count(F.when(F.col("operationType") == "insert", 1)).alias("inserted"),
-        F.count(F.when(F.col("operationType") == "update", 1)).alias("updated"),
-        F.count(F.when(F.col("operationType") == "delete", 1)).alias("removed"),
-        F.count(
-            F.when(F.col("operationType").isin("drop", "dropDatabase"), 1)
-        ).alias("dropped"),
-    )
-    records = envelope_change_stream(observed, namespace, cfg)
-    return _start_topic_sink(records, cfg, sink_dir, checkpoint_dir, trigger_seconds)
+    """All change-stream namespaces through ONE streaming query — the
+    reference funnels every namespace into a single producer loop with a
+    single resume timestamp (route81.go:1224-1234); one query = one
+    checkpoint preserves that recovery model. Per namespace: the
+    namespace filter, observe() counters mirroring the reference's
+    per-op stats (route81.go:621-679; one metric name per namespace, as
+    a plan may not repeat one) and the namespace's pipeline + envelope;
+    the records, which carry their routed topic, are unioned into one
+    sink. Returns the StreamingQuery."""
+    op = F.col("operationType")
+    unioned: DataFrame | None = None
+    for ns, stream in event_streams.items():
+        stream = namespace_filter(
+            stream.withColumn("ns_full", F.concat_ws(".", "ns.db", "ns.coll")), cfg
+        ).drop("ns_full")
+        observed = stream.observe(
+            f"producer_stats:{ns}",
+            F.count(F.lit(1)).alias("queued"),
+            F.count(F.when(op == "insert", 1)).alias("inserted"),
+            F.count(F.when(op == "update", 1)).alias("updated"),
+            F.count(F.when(op == "delete", 1)).alias("removed"),
+            F.count(F.when(op.isin("drop", "dropDatabase"), 1)).alias("dropped"),
+        )
+        records = envelope_change_stream(observed, ns, cfg)
+        unioned = records if unioned is None else unioned.unionByName(records)
+    if unioned is None:
+        raise ValueError("no change-stream namespaces configured")
+    return _start_topic_sink(unioned, cfg, sink_dir, checkpoint_dir, trigger_seconds)

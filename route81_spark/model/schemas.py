@@ -16,6 +16,35 @@ from pyspark.sql import types as T
 from route81_spark.codecs.extjson import ext_json_tagged_schema, strip_ext_json
 
 TS_TYPE = T.StructType([T.StructField("t", T.LongType()), T.StructField("i", T.LongType())])
+# meta.ts on the wire: the tagged `{"$timestamp":{t,i}}` form
+WIRE_TS_TYPE = T.StructType([T.StructField("$timestamp", TS_TYPE)])
+
+# the parquet topic loopback under a sink dir: batch writes land in
+# `topic=<t>` partitions; the change-stream query writes STREAM_DIR, with
+# its `_spark_metadata` commit log. The `_` prefix hides it from a
+# listing of the sink dir, so readers reach it only through that log.
+STREAM_DIR = "_stream"
+
+# the Kafka record every producer emits and every consumer reads; the
+# loopback stores exactly these columns
+RECORD_SCHEMA = T.StructType(
+    [
+        T.StructField("key", T.BinaryType()),
+        T.StructField("value", T.BinaryType()),
+        T.StructField(
+            "headers",
+            T.ArrayType(
+                T.StructType(
+                    [
+                        T.StructField("key", T.StringType()),
+                        T.StructField("value", T.BinaryType()),
+                    ]
+                )
+            ),
+        ),
+        T.StructField("topic", T.StringType()),
+    ]
+)
 
 UPDATE_DESCRIPTION_TYPE = T.StructType(
     [
@@ -88,10 +117,7 @@ def _envelope_wire_schema(doc_schema: T.StructType) -> T.StructType:
                 T.StructType(
                     [
                         T.StructField("_id", T.StringType()),
-                        T.StructField(
-                            "ts",
-                            T.StructType([T.StructField("$timestamp", TS_TYPE)]),
-                        ),
+                        T.StructField("ts", WIRE_TS_TYPE),
                         T.StructField("ns", T.StringType()),
                         T.StructField("op", T.StringType()),
                         T.StructField(
@@ -128,3 +154,16 @@ def decode_envelope(value_col: Column, doc_schema: T.StructType) -> Column:
     )
     plain_data = strip_ext_json(parsed.getField("data"), doc_schema)
     return F.struct(plain_meta.alias("meta"), plain_data.alias("data"))
+
+
+_SEQ_SCHEMA = T.StructType(
+    [T.StructField("meta", T.StructType([T.StructField("ts", WIRE_TS_TYPE)]))]
+)
+
+
+def oplog_seq(value_col: Column) -> Column:
+    """Per-key order of an envelope read back from the parquet topic
+    loopback: its oplog timestamp as t * 10^10 + i (Kafka records use
+    their offset instead). Direct-read envelopes carry ts {0, 0}."""
+    ts = F.from_json(value_col.cast("string"), _SEQ_SCHEMA)["meta"]["ts"]["$timestamp"]
+    return ts.getField("t") * F.lit(10_000_000_000) + ts.getField("i")

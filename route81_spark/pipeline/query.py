@@ -30,7 +30,6 @@ from typing import Any
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from route81_spark.ops.util import lit_string_array
 from route81_spark.pipeline.exprs import PipelineCompileError, compile_expr, extjson_literal
 
 
@@ -483,12 +482,16 @@ def _text_bound(spec: dict, build):
         # the CANONICAL per-language lists (override requires a
         # stem-capable mode, but the query list may differ from a
         # branch's); each language's chain owns its unfolded array
+        # ops imports lazily: its package init registers the extension
+        # stages through pipeline.compiler, which imports this module
+        from route81_spark.ops.stopwords import stop_list as _sl
+        from route81_spark.ops.util import lit_string_array
+
         if lang_over is None and stem not in _CHAIN_LANGS:
             stop_q_arr = lit_string_array(_stop_q)
         stop_arrs: dict[str, Column] = {}
         if lang_over is not None:
             stop_arrs["english"] = lit_string_array(STOP_EN)
-        from route81_spark.ops.stopwords import stop_list as _sl
 
         for _key in _CHAIN_LANGS:
             if stem == _key or lang_over is not None:

@@ -18,8 +18,9 @@ from pyspark.sql.streaming import StreamingQueryListener
 
 
 class StatsListener(StreamingQueryListener):
-    """Accumulates the observe('producer_stats', ...) metrics emitted by
-    the producer job — the counter set mirrors route81.go:488-509."""
+    """Sums the observe('producer_stats:<ns>', ...) metrics the producer
+    job emits per namespace — the counter set mirrors
+    route81.go:488-509."""
 
     def __init__(self, log: bool = True, interval_s: float = 0.0) -> None:
         # log=False ≡ route81's disable-stats-log: counters accumulate
@@ -41,19 +42,20 @@ class StatsListener(StreamingQueryListener):
         pass
 
     def onQueryProgress(self, event) -> None:  # noqa: N802
-        row = event.progress.observedMetrics.get("producer_stats")
-        if row is None:
+        rows = [
+            row.asDict()
+            for name, row in event.progress.observedMetrics.items()
+            if name.startswith("producer_stats")
+        ]
+        if not rows:
             return
         with self.lock:
-            d = row.asDict()
-            self.counters["queued"] += int(d.get("queued", 0) or 0)
-            self.counters["inserted"] += int(d.get("inserted", 0) or 0)
-            self.counters["updated"] += int(d.get("updated", 0) or 0)
-            self.counters["removed"] += int(d.get("removed", 0) or 0)
-            self.counters["dropped"] += int(d.get("dropped", 0) or 0)
-            # rows that reached the sink committed with the batch:
-            # at-least-once success accounting (route81.go:824-831)
-            self.counters["success"] += int(d.get("queued", 0) or 0)
+            for d in rows:
+                for k in ("queued", "inserted", "updated", "removed", "dropped"):
+                    self.counters[k] += int(d.get(k, 0) or 0)
+                # rows that reached the sink committed with the batch:
+                # at-least-once success accounting (route81.go:824-831)
+                self.counters["success"] += int(d.get("queued", 0) or 0)
         if self.log and time.time() - self._last_log >= self.interval_s:
             self._last_log = time.time()
             print(f"route81_spark stats: {self.snapshot()}")

@@ -95,23 +95,20 @@ def test_kafka_sink_source_selection(spark, tmp_path):
     chosen source/sink format from the plan/builder rather than running."""
     from route81_spark.config import load_config
     from route81_spark.jobs.consumer import topic_source
-    from pyspark.sql import types as T
 
-    schema = T.StructType([T.StructField("value", T.BinaryType())])
     cfg_kafka = load_config('kafka = "broker:9092"\n[[consumer]]\ntopics = ["t"]\nnamespace = "db.c"')
     cfg_loop = load_config('[[consumer]]\ntopics = ["t"]\nnamespace = "db.c"')
 
     try:
-        src = topic_source(spark, cfg_kafka, cfg_kafka.consumers[0], str(tmp_path), schema)
-        # the kafka source exposes the fixed kafka schema
-        assert {f.name for f in src.schema.fields} >= {"key", "value", "topic", "partition", "offset"}
+        src = topic_source(spark, cfg_kafka, cfg_kafka.consumers[0], None)
+        # the kafka source exposes the fixed kafka schema, offset as seq
+        assert {f.name for f in src.schema.fields} >= {"key", "value", "topic", "offset", "seq"}
     except Exception as e:  # spark-sql-kafka jar not shipped in this container
         if "Failed to find data source: kafka" not in str(e):
             raise
 
-    (tmp_path / "x").mkdir(exist_ok=True)
-    src2 = topic_source(spark, cfg_loop, cfg_loop.consumers[0], str(tmp_path / "x"), schema)
-    assert [f.name for f in src2.schema.fields] == ["value"]
+    src2 = topic_source(spark, cfg_loop, cfg_loop.consumers[0], str(tmp_path / "x"))
+    assert [f.name for f in src2.schema.fields] == ["key", "value", "headers", "topic", "seq"]
 
 
 def test_run_pipeline_cli(spark, tmp_path):

@@ -430,8 +430,6 @@ def test_mongo_live_roundtrip(spark):  # pragma: no cover
 def test_direct_read_concur_chunks_live_reads(monkeypatch):
     # route81.go:449-450: <= direct-read-concur collections scan the
     # live cluster at once; parquet stand-ins keep one unioned job
-    from argparse import Namespace
-
     from route81_spark import main as M
 
     calls = {"jobs": [], "writes": 0}
@@ -446,18 +444,17 @@ def test_direct_read_concur_chunks_live_reads(monkeypatch):
 
     monkeypatch.setattr(P, "direct_read_job", fake_job)
     ns = [f"db.c{i}" for i in range(5)]
-    args = Namespace(sink_dir="/tmp/x", kafka_bootstrap=None)
 
     cfg = load_config(CFG + "direct-read-concur = 2\n")
     cfg.direct_read_namespaces = ns
-    M.run_direct_reads(None, cfg, {}, {}, args)
+    M.run_direct_reads(None, cfg, {}, {}, "sink")
     assert calls["jobs"] == [ns[0:2], ns[2:4], ns[4:5]]
     assert calls["writes"] == 3
 
     calls["jobs"], calls["writes"] = [], 0
     plain = load_config("direct-read-concur = 2")
     plain.direct_read_namespaces = ns
-    M.run_direct_reads(None, plain, {}, {}, args)
+    M.run_direct_reads(None, plain, {}, {}, "sink")
     assert calls["jobs"] == [ns]  # no live cluster -> one unioned job
     assert calls["writes"] == 1
 

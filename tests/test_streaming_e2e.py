@@ -7,6 +7,7 @@ table state matches the batch-derived expectation."""
 from __future__ import annotations
 
 import json
+import threading
 import time
 
 import pytest
@@ -14,9 +15,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from route81_spark.config import load_config
-from route81_spark.jobs.consumer import consumer_job
+from route81_spark.jobs.consumer import consumer_job, topic_source
 from route81_spark.jobs.producer import namespace_filter, streaming_producer_job
-from route81_spark.model.schemas import change_event_schema
+from route81_spark.model.schemas import STREAM_DIR, change_event_schema
 from route81_spark.sinks.merge import KeyedParquetTable
 from route81_spark.stats import StatsListener, serve_stats
 
@@ -72,7 +73,8 @@ def _await(predicate, timeout=60, every=0.5):
 def test_streaming_loopback(spark, tmp_path):
     cfg = load_config(TOML)
     events_dir = tmp_path / "events_in"
-    topic_dir = tmp_path / "topic"
+    sink_dir = tmp_path / "topic"
+    topic_dir = sink_dir / STREAM_DIR
     events_dir.mkdir()
 
     # phase files: 20 inserts, 10 updates, 5 deletes
@@ -87,16 +89,11 @@ def test_streaming_loopback(spark, tmp_path):
 
     listener = StatsListener()
     spark.streams.addListener(listener)
-    stream = (
-        spark.readStream.schema(change_event_schema(DOC_SCHEMA))
-        .json(str(events_dir))
-        .withColumn("ns_full", F.concat_ws(".", "ns.db", "ns.coll"))
-    )
-    stream = namespace_filter(stream, cfg).drop("ns_full")
+    stream = spark.readStream.schema(change_event_schema(DOC_SCHEMA)).json(str(events_dir))
 
     pq = streaming_producer_job(
-        spark, cfg, stream, "test.test",
-        sink_dir=str(topic_dir), checkpoint_dir=str(tmp_path / "ckpt_p"),
+        spark, cfg, {"test.test": stream},
+        sink_dir=str(sink_dir), checkpoint_dir=str(tmp_path / "ckpt_p"),
         trigger_seconds=0.5,
     )
     try:
@@ -112,8 +109,8 @@ def test_streaming_loopback(spark, tmp_path):
     with open(events_dir / "p3.json", "w") as f:
         f.write(json.dumps(_event("insert", "99", 99, t=4)) + "\n")
     pq2 = streaming_producer_job(
-        spark, cfg, stream, "test.test",
-        sink_dir=str(topic_dir), checkpoint_dir=str(tmp_path / "ckpt_p"),
+        spark, cfg, {"test.test": stream},
+        sink_dir=str(sink_dir), checkpoint_dir=str(tmp_path / "ckpt_p"),
         trigger_seconds=0.5,
     )
     try:
@@ -131,46 +128,12 @@ def test_streaming_loopback(spark, tmp_path):
     )
     assert sample["meta"]["op"] == "i" and sample["data"]["i"] == {"$numberInt": "3"}
 
-    # consumer: stream the topic dir into the keyed table, ordered by
-    # the envelope timestamp as seq
+    # consumer: stream the loopback into the keyed table, ordered by
+    # the envelope's oplog timestamp as seq
     table = KeyedParquetTable(spark, str(tmp_path / "t2"))
     table.init(spark.createDataFrame([], DOC_SCHEMA))
     spec = cfg.consumers[0]
-
-    # seq from the envelope's oplog timestamp — on the wire ts is the
-    # tagged {"$timestamp":{t,i}} form
-    seq_schema = T.StructType(
-        [
-            T.StructField(
-                "meta",
-                T.StructType(
-                    [
-                        T.StructField(
-                            "ts",
-                            T.StructType(
-                                [
-                                    T.StructField(
-                                        "$timestamp",
-                                        T.StructType(
-                                            [
-                                                T.StructField("t", T.LongType()),
-                                                T.StructField("i", T.LongType()),
-                                            ]
-                                        ),
-                                    )
-                                ]
-                            ),
-                        )
-                    ]
-                ),
-            )
-        ]
-    )
-    ts = F.from_json(F.col("value").cast("string"), seq_schema)["meta"]["ts"]["$timestamp"]
-    rec_stream = (
-        spark.readStream.schema(records.schema).parquet(str(topic_dir))
-        .withColumn("seq", ts.getField("t") * F.lit(10_000_000_000) + ts.getField("i"))
-    )
+    rec_stream = topic_source(spark, cfg, spec, str(sink_dir))
     consumer_stats: dict = {}
     cq = consumer_job(
         spark, spec, rec_stream, table, DOC_SCHEMA, str(tmp_path / "ckpt_c"),
@@ -216,9 +179,8 @@ def test_streaming_loopback(spark, tmp_path):
 
 def test_multi_namespace_single_query(spark, tmp_path):
     """Two namespaces through one streaming query/checkpoint
-    (route81.go:1224-1234: one producer loop, one resume point)."""
-    from route81_spark.jobs.producer import streaming_producer_multi
-
+    (route81.go:1224-1234: one producer loop, one resume point); the
+    listener sums both namespaces' observe() counters."""
     cfg = load_config('topic-name-prefix = "p"\n')
     dirs = {}
     for ns in ("test.a", "test.b"):
@@ -228,18 +190,17 @@ def test_multi_namespace_single_query(spark, tmp_path):
             for i in range(5):
                 f.write(json.dumps(_event("insert", str(i), i, t=1)) + "\n")
         dirs[ns] = spark.readStream.schema(change_event_schema(DOC_SCHEMA)).json(str(d))
-    q = streaming_producer_multi(
-        spark, cfg, dirs, str(tmp_path / "out"), str(tmp_path / "ck"), 0.5
-    )
+    listener = StatsListener(log=False)
+    spark.streams.addListener(listener)
+    out = str(tmp_path / "out" / STREAM_DIR)
+    q = streaming_producer_job(spark, cfg, dirs, str(tmp_path / "out"), str(tmp_path / "ck"), 0.5)
     try:
-        assert _await(
-            lambda: spark.read.parquet(str(tmp_path / "out")).count() == 10
-        )
+        assert _await(lambda: spark.read.parquet(out).count() == 10)
+        assert _await(lambda: listener.snapshot()["inserted"] == 10)
     finally:
         q.stop()
-    topics = {
-        r["topic"] for r in spark.read.parquet(str(tmp_path / "out")).select("topic").collect()
-    }
+        spark.streams.removeListener(listener)
+    topics = {r["topic"] for r in spark.read.parquet(out).select("topic").collect()}
     assert topics == {"p.test.a", "p.test.b"}
 
 
@@ -409,20 +370,78 @@ bulk-flush-duration = "1s"
     assert set(merged.columns) == {"n_nationkey", "n_name", "n_regionkey", "_id"}
 
 
+def test_main_change_streams_two_topics(spark, tmp_path, capsys):
+    """The daemon's change-stream path through main(): two namespaces
+    under a topic prefix go through one producer query into the
+    loopback; one consumer subscribed to both topics merges them into
+    its keyed table; the stats listener logs the producer counters."""
+    from route81_spark.main import main
+
+    for coll in ("a", "b"):
+        d = tmp_path / "events" / f"test.{coll}"
+        d.mkdir(parents=True)
+        evs = [_event("insert", str(k), k, t=1) for k in range(4)]
+        evs += [_event("update", "1", 10, t=2), _event("delete", "2", t=3)]
+        with open(d / "e.json", "w") as f:
+            for e in evs:
+                # ids unique across both namespaces
+                _id = coll + e["documentKey"]["_id"]
+                if e["fullDocument"]:
+                    e["fullDocument"]["_id"] = _id
+                e.update(ns={"db": "test", "coll": coll}, documentKey={"_id": _id})
+                f.write(json.dumps(e) + "\n")
+    table = KeyedParquetTable(spark, str(tmp_path / "tables" / "test.target"))
+    table.init(spark.createDataFrame([], "_id string, i bigint, tag string"))
+    cfg = tmp_path / "daemon.toml"
+    cfg.write_text(
+        """
+change-stream-namespaces = ["test.a", "test.b"]
+topic-name-prefix = "demo"
+
+[[consumer]]
+namespace = "test.target"
+topics = ["demo.test.a", "demo.test.b"]
+document-root-path = "data"
+delete-id-path = "meta._id"
+bulk-flush-duration = "1s"
+"""
+    )
+    argv = [
+        "--config", str(cfg),
+        "--events-dir", str(tmp_path / "events"),
+        "--sink-dir", str(tmp_path / "topics"),
+        "--tables-out", str(tmp_path / "tables"),
+    ]
+    # the daemon runs until its queries stop: stop them once the table
+    # reaches its final state (or the wait gives up)
+    rc = []
+    daemon = threading.Thread(target=lambda: rc.append(main(argv)))
+    daemon.start()
+    want = {"a0": 0, "a1": 10, "a3": 3, "b0": 0, "b1": 10, "b3": 3}
+    try:
+        _await(lambda: {r["_id"]: r["i"] for r in table.read().collect()} == want)
+    finally:
+        for q in spark.streams.active:
+            q.stop()
+        daemon.join(timeout=60)
+    assert not daemon.is_alive() and rc == [0]
+    assert {r["_id"]: r["i"] for r in table.read().collect()} == want
+    log = capsys.readouterr().out
+    assert "route81_spark stats:" in log and "'inserted': 8" in log
+
+
 def test_effective_bootstrap_flag_or_toml():
     # the TOML `kafka` key must select the real sink even without the
     # CLI flag (route81's flag/TOML merge, route81.go:342-404)
-    from argparse import Namespace
-
-    from route81_spark.main import effective_bootstrap
+    from route81_spark.main import merge_flags, parse_args
 
     toml_cfg = load_config('kafka = "broker:9092"')
     plain = load_config("")
-    none_args = Namespace(kafka_bootstrap=None)
-    flag_args = Namespace(kafka_bootstrap="flag:9092")
-    assert effective_bootstrap(toml_cfg, none_args) == "broker:9092"
-    assert effective_bootstrap(plain, none_args) == ""
-    assert effective_bootstrap(toml_cfg, flag_args) == "flag:9092"  # flag wins
+    none_args = parse_args(["--config", "c.toml"])
+    flag_args = parse_args(["--config", "c.toml", "--kafka-bootstrap", "flag:9092"])
+    assert merge_flags(toml_cfg, none_args).kafka_servers == "broker:9092"
+    assert merge_flags(plain, none_args).kafka_servers == ""
+    assert merge_flags(toml_cfg, flag_args).kafka_servers == "flag:9092"  # flag wins
 
 
 def test_envelope_change_stream_live_applies_suffix_only(spark, monkeypatch):
