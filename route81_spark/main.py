@@ -190,8 +190,9 @@ def run_consumers(
             doc_schema = table.read().schema if table.exists() else None
             if doc_schema is None:
                 raise SystemExit(
-                    f"seed the target table first: "
-                    f"{os.path.join(tables_out, spec.mongo_namespace)}/current must exist"
+                    f"seed the target table first: no table at "
+                    f"{os.path.join(tables_out, spec.mongo_namespace)}; create it with "
+                    f"KeyedParquetTable.init"
                 )
         q = consumer_job(
             spark, spec, topic_source(spark, cfg, spec, sink_dir), table, doc_schema,

@@ -73,6 +73,17 @@ def scd2_history(
     )
 
 
+def split_changes(
+    changes: DataFrame, key: str = "doc_id", seq: str | None = "seq"
+) -> tuple[DataFrame, DataFrame]:
+    """Collapse a change batch to its last change per key (when `seq` is
+    given and present) and take the upsert documents out of it. Returns
+    (collapsed changes, upsert documents as `doc.*` rows)."""
+    if seq is not None and seq in changes.columns:
+        changes = latest_per_key(changes, key=key, seq=seq)
+    return changes, changes.filter(~F.col("is_delete")).select("doc.*")
+
+
 def apply_changes(
     target: DataFrame,
     changes: DataFrame,
@@ -92,103 +103,63 @@ def apply_changes(
     and old rows read null there; documents that drop fields store
     null, exactly the BSON-absent reading.
     """
-    if seq is not None and seq in changes.columns:
-        changes = latest_per_key(changes, key=key, seq=seq)
-    upserts = changes.filter(~F.col("is_delete")).select("doc.*")
+    changes, upserts = split_changes(changes, key=key, seq=seq)
     changed_keys = changes.select(F.col(key))
     kept = target.join(changed_keys, target[target_key] == changed_keys[key], "left_anti")
     return kept.unionByName(upserts, allowMissingColumns=True)
 
 
 class KeyedParquetTable:
-    """Mutable keyed table backed by a parquet directory with
-    atomic-rename versioning — the harness stand-in for Delta MERGE /
-    MongoDB bulk writes. Used from foreachBatch.
+    """Mutable keyed table of parquet versions — the harness stand-in
+    for Delta MERGE / MongoDB bulk writes. Used from foreachBatch.
 
-    With `buckets=N` the table is hash-partitioned on the key
-    (`bucket=pmod(xxhash64(key), N)` directories) and a merge rewrites
-    ONLY the buckets that contain changed keys — the same file-pruning
-    property a Delta MERGE gets from data skipping. A CDC batch touching
-    0.1% of keys rewrites ~0.1% of buckets instead of the whole table,
-    which is what makes a keyed sink viable at 100 TB."""
+    Layout: immutable version directories `<path>/v<n>/` and a one-line
+    pointer file `<path>/_current` naming the live one. `init` and
+    `merge` share one commit: write the new state to `v<n+1>/`, then
+    `os.replace` the pointer, then remove versions older than the one
+    just replaced. A crash at any step leaves the pointer on a complete
+    version (the old or the new state), and replaying the batch is
+    idempotent because replace/delete-by-key is, so no batch id is
+    recorded. The replaced version is kept until the next commit, so a
+    DataFrame from `read()` stays valid across one later merge."""
 
-    def __init__(self, spark: SparkSession, path: str, key: str = "_id", buckets: int = 0):
+    def __init__(self, spark: SparkSession, path: str, key: str = "_id"):
         self.spark = spark
         self.path = path
         self.key = key
-        self.buckets = buckets
 
     @property
-    def _current(self) -> str:
-        return os.path.join(self.path, "current")
+    def _pointer(self) -> str:
+        return os.path.join(self.path, "_current")
+
+    def _live(self) -> str:
+        with open(self._pointer) as f:
+            return f.read().strip()
 
     def exists(self) -> bool:
-        return os.path.isdir(self._current)
+        return os.path.isfile(self._pointer)
 
     def read(self) -> DataFrame:
-        df = self.spark.read.parquet(self._current)
-        return df.drop("bucket") if self.buckets else df
-
-    def _bucket_of(self, col) -> "F.Column":
-        return F.pmod(F.xxhash64(col.cast("string")), F.lit(self.buckets)).cast("int")
+        return self.spark.read.parquet(os.path.join(self.path, self._live()))
 
     def init(self, df: DataFrame) -> None:
-        os.makedirs(self.path, exist_ok=True)
-        if self.buckets:
-            (
-                df.withColumn("bucket", self._bucket_of(F.col(self.key)))
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(self._current)
-            )
-        else:
-            df.write.mode("overwrite").parquet(self._current)
+        self._commit(df)
 
     def merge(self, changes: DataFrame, seq: str | None = "seq") -> None:
         """changes: doc_id, is_delete, doc struct (+ optional seq)."""
-        if self.buckets:
-            self._merge_bucketed(changes, seq)
-            return
-        new_state = apply_changes(self.read(), changes, seq=seq, target_key=self.key)
-        tmp = os.path.join(self.path, "next")
-        new_state.write.mode("overwrite").parquet(tmp)
-        old = self._current
-        swap = os.path.join(self.path, "prev")
-        if os.path.isdir(swap):
-            shutil.rmtree(swap)
-        os.rename(old, swap)
-        os.rename(tmp, old)
-        shutil.rmtree(swap)
+        self._commit(apply_changes(self.read(), changes, seq=seq, target_key=self.key))
 
-    def _merge_bucketed(self, changes: DataFrame, seq: str | None) -> None:
-        """Rewrite only the buckets containing changed keys, via dynamic
-        partition overwrite (non-touched bucket directories are left
-        untouched on disk)."""
-        changes = changes.withColumn("bucket", self._bucket_of(F.col("doc_id")))
-        touched = [r["bucket"] for r in changes.select("bucket").distinct().collect()]
-        if not touched:
-            return
-        current = self.spark.read.parquet(self._current).filter(
-            F.col("bucket").isin(touched)
-        )
-        new_state = apply_changes(
-            current.drop("bucket"), changes.drop("bucket"), seq=seq, target_key=self.key
-        )
-        out = new_state.withColumn("bucket", self._bucket_of(F.col(self.key)))
-        # write the new versions of the touched buckets to a scratch dir
-        # (cannot overwrite the path being read), then swap exactly those
-        # bucket directories; untouched buckets are never rewritten
-        tmp = os.path.join(self.path, "next")
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp)
-        out.write.mode("overwrite").partitionBy("bucket").parquet(tmp)
-        for b in touched:
-            cur_b = os.path.join(self._current, f"bucket={b}")
-            new_b = os.path.join(tmp, f"bucket={b}")
-            if os.path.isdir(cur_b):
-                shutil.rmtree(cur_b)
-            if os.path.isdir(new_b):
-                # bucket still has rows; an all-deleted bucket simply
-                # stays removed so deletes are not resurrected
-                os.rename(new_b, cur_b)
-        shutil.rmtree(tmp, ignore_errors=True)
+    def _commit(self, state: DataFrame) -> None:
+        os.makedirs(self.path, exist_ok=True)
+        old = self._live() if self.exists() else "v0"
+        new = f"v{int(old[1:]) + 1}"
+        # overwrite: a crash before the pointer swap may have left a
+        # partial v<n+1>; it was never live, so nothing reads it
+        state.write.mode("overwrite").parquet(os.path.join(self.path, new))
+        tmp = self._pointer + ".tmp"
+        with open(tmp, "w") as f:
+            f.write(new)
+        os.replace(tmp, self._pointer)
+        for d in os.listdir(self.path):
+            if d.startswith("v") and d not in (old, new):
+                shutil.rmtree(os.path.join(self.path, d))

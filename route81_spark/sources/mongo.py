@@ -276,11 +276,9 @@ class MongoKeyedSink:
         """Pure plan split (unit-testable without a live cluster):
         collapse to last-change-per-key, then partition into the upsert
         documents and the delete ids."""
-        from route81_spark.sinks.merge import latest_per_key
+        from route81_spark.sinks.merge import split_changes
 
-        if seq is not None and seq in changes.columns:
-            changes = latest_per_key(changes, seq=seq)
-        upserts = changes.filter(~F.col("is_delete")).select("doc.*")
+        changes, upserts = split_changes(changes, seq=seq)
         deletes = changes.filter(F.col("is_delete")).select("doc_id")
         return upserts, deletes
 

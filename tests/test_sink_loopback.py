@@ -104,40 +104,109 @@ def test_loopback_three_phases(spark, tmp_path):
     assert table.read().count() == 0
 
 
-def test_bucketed_merge_rewrites_only_touched_buckets(spark, tmp_path):
-    import os
-
-    n, buckets = 200, 16
-    src = spark.range(n).select(
+def _seeded_table(spark, path):
+    """20-row keyed table with two commits behind it, so a merge also
+    garbage-collects a version; returns (table, the change batch)."""
+    src = spark.range(20).select(
         F.col("id").cast("string").alias("_id"), F.col("id").cast("int").alias("i")
     )
-    table = KeyedParquetTable(spark, str(tmp_path / "bt"), buckets=buckets)
-    table.init(src)
-    assert table.read().count() == n
-
-    # record file mtimes per bucket dir before the merge
-    cur = str(tmp_path / "bt" / "current")
-    before = {d: os.path.getmtime(os.path.join(cur, d)) for d in os.listdir(cur) if d.startswith("bucket=")}
-
-    # change 3 keys: update "7", delete "8", insert "999"
+    table = KeyedParquetTable(spark, path)
+    table.init(src.limit(0))
+    table.merge(src.select(
+        F.col("_id").alias("doc_id"), F.lit(False).alias("is_delete"),
+        F.struct("_id", "i").alias("doc"), F.lit(1).alias("seq"),
+    ))
     changes = spark.createDataFrame(
         [
-            ("7", False, ("7", 700), 1),
-            ("8", True, None, 1),
-            ("999", False, ("999", 999), 1),
+            ("7", False, ("7", 700), 2),
+            ("8", True, None, 2),
+            ("999", False, ("999", 999), 2),
         ],
         "doc_id string, is_delete boolean, doc struct<_id:string,i:int>, seq int",
     )
+    return table, changes
+
+
+def _rows(table):
+    return sorted((r["_id"], r["i"]) for r in table.read().collect())
+
+
+class _Crash(Exception):
+    pass
+
+
+def _inject(monkeypatch, root, on_step):
+    """Route the merge module's filesystem calls on `root` through
+    `on_step(name)` before they run: os.replace, os.rename,
+    shutil.rmtree and opening a file for writing."""
+    import builtins
+    import os
+    import shutil
+
+    from route81_spark.sinks import merge as merge_mod
+
+    def wrap(name, fn, writes_only=False):
+        def call(path, *args, **kwargs):
+            mode = args[0] if args else kwargs.get("mode", "r")
+            if str(path).startswith(root) and not (writes_only and "r" in mode):
+                on_step(name)
+            return fn(path, *args, **kwargs)
+        return call
+
+    for mod, name in ((os, "replace"), (os, "rename"), (shutil, "rmtree")):
+        monkeypatch.setattr(mod, name, wrap(name, getattr(mod, name)))
+    monkeypatch.setattr(
+        merge_mod, "open", wrap("write", builtins.open, writes_only=True), raising=False
+    )
+
+
+def test_merge_crash_at_every_step_then_replay(spark, tmp_path, monkeypatch):
+    """At-least-once contract: a crash at any filesystem step of a merge
+    leaves the table readable at the pre- or post-merge state, and
+    replaying the same batch reaches the uninterrupted run's state."""
+    import shutil
+
+    base = str(tmp_path / "base")
+    table, changes = _seeded_table(spark, base)
+    pre = _rows(table)
+
+    ref = str(tmp_path / "ref")
+    shutil.copytree(base, ref)
+    steps = []
+    with monkeypatch.context() as m:
+        _inject(m, ref, steps.append)
+        KeyedParquetTable(spark, ref).merge(changes)
+    post = _rows(KeyedParquetTable(spark, ref))
+    assert post != pre and steps
+
+    for k in range(len(steps)):
+        path = str(tmp_path / f"crash{k}")
+        shutil.copytree(base, path)
+        t = KeyedParquetTable(spark, path)
+        seen = []
+
+        def crash(name, k=k, seen=seen):
+            seen.append(name)
+            if len(seen) == k + 1:
+                raise _Crash(name)
+
+        with monkeypatch.context() as m:
+            _inject(m, path, crash)
+            with pytest.raises(_Crash):
+                t.merge(changes)
+        assert _rows(t) in (pre, post), f"crash at step {k} ({steps[k]})"
+        t.merge(changes)
+        assert _rows(t) == post, f"replay after crash at step {k} ({steps[k]})"
+
+
+def test_read_survives_a_later_merge(spark, tmp_path):
+    """A DataFrame taken from read() stays valid across one later merge
+    (the streaming tests poll read() while the consumer merges)."""
+    table, changes = _seeded_table(spark, str(tmp_path / "t"))
+    df = table.read()
+    before = df.count()
     table.merge(changes)
-
-    got = {r["_id"]: r["i"] for r in table.read().collect()}
-    assert len(got) == n  # -1 delete +1 insert
-    assert got["7"] == 700 and "8" not in got and got["999"] == 999
-
-    after = {d: os.path.getmtime(os.path.join(cur, d)) for d in os.listdir(cur) if d.startswith("bucket=")}
-    untouched = [d for d in before if before[d] == after.get(d)]
-    # at most 3 buckets were rewritten; the rest must be byte-identical dirs
-    assert len(untouched) >= buckets - 3
+    assert df.count() == before
 
 
 def test_namespace_feedback_loop_filter(spark):
