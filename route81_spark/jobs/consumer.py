@@ -13,8 +13,9 @@ batch — the reference gets this from per-partition consumption order.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -63,7 +64,15 @@ def apply_consumer_batch(
     Partial-failure contract (route81.go:1100-1116): a message whose
     document id cannot be extracted is counted as failed and skipped;
     the rest of the batch still applies. Returns {'success': n,
-    'failed': n} for stats accounting."""
+    'failed': n} for stats accounting.
+
+    The counts come from an `Observation` on the classified rows, which
+    the merge's own actions complete: there is no persist and no count
+    job of its own. An `Observation` completes only in the session that
+    ran it, so `table.merge` must run its write in the session of the
+    DataFrame it is given (`batch.sparkSession`; inside foreachBatch,
+    the stream's cloned session), and it must execute that DataFrame,
+    or the wait for the counts never ends."""
     decoded = decode_records(batch, spec, doc_schema)
     classified = classify(
         decoded,
@@ -73,21 +82,18 @@ def apply_consumer_batch(
         ),
         keep=["seq"],
     )
-    # persist so the source is scanned ONCE per micro-batch: the stats
-    # count and the merge below share this materialization (previously
-    # the collect() executed decode+classify, then merge re-ran the
-    # whole unpersisted plan a second time)
-    classified = classified.persist()
-    try:
-        counts = classified.select(
-            F.count(F.lit(1)).alias("total"),
-            F.count(F.when(F.col("doc_id").isNull(), 1)).alias("failed"),
-        ).collect()[0]
-        good = classified.filter(F.col("doc_id").isNotNull())
-        table.merge(good, seq="seq" if "seq" in classified.columns else None)
-    finally:
-        classified.unpersist()
-    return {"success": int(counts["total"] - counts["failed"]), "failed": int(counts["failed"])}
+    counts = Observation()
+    observed = classified.observe(
+        counts,
+        F.count(F.lit(1)).alias("total"),
+        F.count(F.when(F.col("doc_id").isNull(), 1)).alias("failed"),
+    )
+    table.merge(
+        observed.filter(F.col("doc_id").isNotNull()),
+        seq="seq" if "seq" in classified.columns else None,
+    )
+    got = counts.get
+    return {"success": int(got["total"] - got["failed"]), "failed": int(got["failed"])}
 
 
 def topic_source(spark: SparkSession, cfg, spec: ConsumerSpec, sink_dir: str | None) -> DataFrame:
@@ -147,18 +153,18 @@ def consumer_job(
     table: KeyedParquetTable,
     doc_schema: T.StructType,
     checkpoint_dir: str,
-    stats: dict | None = None,
+    stats: Callable[[dict], None] | None = None,
 ):
     """Streaming consumer: foreachBatch keyed merge with the reference's
-    flush cadence as the trigger interval. Pass a dict as `stats` to
-    accumulate the consumer success/failed counters
-    (route81.go:497-505)."""
+    flush cadence as the trigger interval. `stats`, when given, is
+    called with each batch's {'success': n, 'failed': n} counts — the
+    consumer counters of route81.go:497-505 (`StatsListener.add_consumer`
+    in the daemon)."""
 
     def on_batch(batch: DataFrame, batch_id: int) -> None:
         result = apply_consumer_batch(table, batch, spec, doc_schema)
         if stats is not None:
-            stats["success"] = stats.get("success", 0) + result["success"]
-            stats["failed"] = stats.get("failed", 0) + result["failed"]
+            stats(result)
 
     return (
         record_stream.writeStream.foreachBatch(on_batch)

@@ -25,8 +25,9 @@ mustConfig -> start reads -> event loop) as wiring over `jobs/`:
   batch records land in `topic=<t>` partitions, the change-stream
   query's in `_stream/` behind its commit log, and consumers read both
   and keep their subscribed topics by the records' `topic` column
-* unless disable-stats, a listener sums the producer counters and logs
-  them every stats-duration; `http-server` also serves them
+* unless disable-stats, a listener sums the producer and consumer
+  counters and logs them every stats-duration; `http-server` also
+  serves them
 """
 
 from __future__ import annotations
@@ -165,11 +166,12 @@ def run_change_streams(
 
 
 def run_consumers(
-    spark, cfg: Config, sink_dir: str | None, tables_out: str, ckpt_root: str
+    spark, cfg: Config, sink_dir: str | None, tables_out: str, ckpt_root: str, stats=None
 ) -> list:
     """Wire each [[consumer]] block: its record stream (Kafka, or the
     parquet topic loopback) -> decode -> classify -> keyed merge into
-    `tables_out/<ns>` (route81 consumer path §3.3)."""
+    `tables_out/<ns>` (route81 consumer path §3.3). `stats` receives
+    each batch's success/failed counts (`consumer_job`)."""
     from route81_spark.jobs.consumer import consumer_job, consumer_sink, topic_source
 
     queries = []
@@ -196,7 +198,7 @@ def run_consumers(
                 )
         q = consumer_job(
             spark, spec, topic_source(spark, cfg, spec, sink_dir), table, doc_schema,
-            ckpt_dir(cfg, ckpt_root, f"_ckpt_{spec.mongo_namespace}"),
+            ckpt_dir(cfg, ckpt_root, f"_ckpt_{spec.mongo_namespace}"), stats=stats,
         )
         queries.append(q)
     return queries
@@ -247,7 +249,8 @@ def main(argv: list[str] | None = None) -> int:
             )
         if cfg.consumers and args.tables_out:
             queries += run_consumers(
-                spark, cfg, args.sink_dir, args.tables_out, args.checkpoint_dir or args.tables_out
+                spark, cfg, args.sink_dir, args.tables_out, args.checkpoint_dir or args.tables_out,
+                stats=listener.add_consumer if listener is not None else None,
             )
         if queries and args.duration:
             time.sleep(args.duration)

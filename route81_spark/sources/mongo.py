@@ -282,7 +282,7 @@ class MongoKeyedSink:
         deletes = changes.filter(F.col("is_delete")).select("doc_id")
         return upserts, deletes
 
-    def merge(self, changes: DataFrame, seq: str | None = "seq") -> None:  # pragma: no cover - live only
+    def merge(self, changes: DataFrame, seq: str | None = "seq") -> None:
         changes = changes.persist()
         try:
             upserts, deletes = self.split(changes, seq)

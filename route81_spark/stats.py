@@ -20,7 +20,10 @@ from pyspark.sql.streaming import StreamingQueryListener
 class StatsListener(StreamingQueryListener):
     """Sums the observe('producer_stats:<ns>', ...) metrics the producer
     job emits per namespace — the counter set mirrors
-    route81.go:488-509."""
+    route81.go:488-509 — and, through `add_consumer`, the consumer
+    jobs' success/failed counts (route81.go:497-505) as
+    `consumer_success` / `consumer_failed`. Any query's progress event
+    logs the counters, on the stats-duration cadence."""
 
     def __init__(self, log: bool = True, interval_s: float = 0.0) -> None:
         # log=False ≡ route81's disable-stats-log: counters accumulate
@@ -34,6 +37,7 @@ class StatsListener(StreamingQueryListener):
         self.counters: dict[str, int] = {
             "success": 0, "failed": 0, "inserted": 0, "updated": 0,
             "removed": 0, "dropped": 0, "queued": 0,
+            "consumer_success": 0, "consumer_failed": 0,
         }
         self.started_at = time.time()
         self.terminated: list[str] = []
@@ -47,8 +51,6 @@ class StatsListener(StreamingQueryListener):
             for name, row in event.progress.observedMetrics.items()
             if name.startswith("producer_stats")
         ]
-        if not rows:
-            return
         with self.lock:
             for d in rows:
                 for k in ("queued", "inserted", "updated", "removed", "dropped"):
@@ -59,6 +61,13 @@ class StatsListener(StreamingQueryListener):
         if self.log and time.time() - self._last_log >= self.interval_s:
             self._last_log = time.time()
             print(f"route81_spark stats: {self.snapshot()}")
+
+    def add_consumer(self, counts: dict) -> None:
+        """Add one consumer micro-batch's {'success', 'failed'} counts;
+        the consumer query's next progress event logs them."""
+        with self.lock:
+            self.counters["consumer_success"] += counts["success"]
+            self.counters["consumer_failed"] += counts["failed"]
 
     def onQueryTerminated(self, event) -> None:  # noqa: N802
         # fatal-error handling ≡ route81's shutdown on fatal Kafka errors

@@ -316,7 +316,7 @@ def test_scd2_history_versions_and_reinsert(spark):
     assert final.count("Exchange hashpartitioning") == 1
 
 
-def test_apply_changes_schema_drift(spark):
+def test_apply_changes_schema_drift(spark, tmp_path):
     """The reference sink is schemaless: a replace that ADDS a field
     widens the table (old rows read null); one that DROPS a field
     stores null — the merge must not reject either shape."""
@@ -341,6 +341,152 @@ def test_apply_changes_schema_drift(spark):
     out2 = apply_changes(out, narrow, seq=None)
     row_a = out2.filter(SF.col("_id") == "a").collect()[0]
     assert row_a["x"] is None and row_a["extra"] is None
+
+    # the same merges through a keyed table, which reads its versions
+    # with the schema it committed: re-read through a fresh instance on
+    # the same path, and let that instance widen the table once more
+    path = str(tmp_path / "t")
+    table = KeyedParquetTable(spark, path)
+    table.init(target)
+    table.merge(changes, seq=None)
+    assert table.read().columns == ["_id", "x", "extra"]
+    table.merge(narrow, seq=None)
+    restarted = KeyedParquetTable(spark, path)
+    for t in (table, restarted):
+        got = {r["_id"]: (r["x"], r["extra"]) for r in t.read().collect()}
+        assert got == {"a": (None, None), "b": (20, "new"), "c": (30, "brand")}
+    wider = spark.createDataFrame(
+        [("d", False, ("d", "more"))],
+        "doc_id string, is_delete boolean, doc struct<_id:string,more:string>",
+    )
+    restarted.merge(wider, seq=None)
+    # the first instance's carried schema names an older version
+    assert table.read().columns == ["_id", "x", "extra", "more"]
+    assert table.read().filter(SF.col("_id") == "d").collect()[0]["more"] == "more"
+
+
+def _consumer_msg(_id, t, x=None):
+    """One consumer record (value, seq): an upsert of {_id, x}, or a
+    delete of `_id` when `x` is None."""
+    data = "null" if x is None else f'{{"_id":"{_id}","x":{{"$numberInt":"{x}"}}}}'
+    return (
+        f'{{"meta":{{"_id":"{_id}","ts":{{"$timestamp":{{"t":{t},"i":0}}}},'
+        f'"ns":"db.c"}},"data":{data}}}'
+    ).encode(), t
+
+
+def _consumer_batch(spark, *extra):
+    """a upserted twice (10, then 11), c inserted, b deleted."""
+    return spark.createDataFrame(
+        [_consumer_msg("a", 1, 10), _consumer_msg("c", 2, 3), _consumer_msg("a", 3, 11),
+         _consumer_msg("b", 4), *extra],
+        "value binary, seq long",
+    )
+
+
+def _consumer_spec():
+    from route81_spark.config import ConsumerSpec
+
+    return ConsumerSpec(
+        kafka_topics=["t"], mongo_namespace="db.c",
+        document_root_path="data", delete_id_path="meta._id",
+    )
+
+
+def test_consumer_batch_runs_at_most_three_jobs(spark, tmp_path):
+    """Fixed per-batch cost: one consumer micro-batch with `seq` —
+    decode, classify, the success/failed counts and the keyed merge —
+    runs at most 3 Spark jobs (the merge's broadcast of the batch's
+    keys, its one shuffle of the changes and its write), counted under
+    this test's own job group. The batch is read from parquet, as the
+    daemon's topic records are: Spark plans the broadcast from the
+    file's size, where an RDD-backed batch has no size estimate."""
+    from route81_spark.jobs.consumer import apply_consumer_batch
+
+    seed = spark.createDataFrame([("a", 1), ("b", 2)], "_id string, x int")
+    table = KeyedParquetTable(spark, str(tmp_path / "t"))
+    table.init(seed)
+    _consumer_batch(spark).write.parquet(str(tmp_path / "topic"))
+    batch = spark.read.schema("value binary, seq long").parquet(str(tmp_path / "topic"))
+    spec = _consumer_spec()
+    sc = spark.sparkContext
+    group = f"consumer-batch-{tmp_path.name}"
+    sc.setJobGroup(group, "one consumer micro-batch")
+    try:
+        stats = apply_consumer_batch(table, batch, spec, seed.schema)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert stats == {"success": 4, "failed": 0}
+    assert {r["_id"]: r["x"] for r in table.read().collect()} == {"a": 11, "c": 3}
+    assert len(jobs) <= 3, f"{len(jobs)} jobs"
+
+
+def test_consumer_counts_through_mongo_shaped_sink(spark, tmp_path, monkeypatch):
+    """The consumer's counts come from an Observation that the sink's
+    own actions complete. The Mongo sink first persists the changes and
+    then runs two actions on the cached relation (the upsert write and
+    the delete bulk): the counts must still arrive, directly and inside
+    foreachBatch (the stream's cloned session), and not wait forever.
+    The two Mongo writes are stubbed with parquet writes."""
+    import threading
+
+    from route81_spark.config import load_config
+    from route81_spark.jobs.consumer import apply_consumer_batch
+    from route81_spark.sources import mongo
+
+    class ParquetSave:
+        def __init__(self, df, path):
+            self.df, self.path = df, path
+
+        def save(self):
+            self.df.write.mode("append").parquet(self.path)
+
+    out = tmp_path / "out"
+    monkeypatch.setattr(
+        mongo, "mongo_writer", lambda df, cfg, ns: ParquetSave(df, str(out / "upserts"))
+    )
+    monkeypatch.setattr(
+        mongo, "delete_writer",
+        lambda cfg, ns, bulk_size=100: lambda df: ParquetSave(df, str(out / "deletes")).save(),
+    )
+    sink = mongo.MongoKeyedSink(load_config('mongo = "mongodb://db:27017"\n'), "db.c")
+    spec = _consumer_spec()
+    doc_schema = spark.createDataFrame([], "_id string, x int").schema
+    batch = _consumer_batch(spark, (b"not json", 5))
+
+    got = {}
+    worker = threading.Thread(
+        target=lambda: got.update(apply_consumer_batch(sink, batch, spec, doc_schema)),
+        daemon=True,
+    )
+    worker.start()
+    worker.join(120)
+    assert not worker.is_alive(), "the counts never arrived"
+    assert got == {"success": 4, "failed": 1}
+    assert sorted(tuple(r) for r in spark.read.parquet(str(out / "upserts")).collect()) == [
+        ("a", 11), ("c", 3)
+    ]
+    assert [r["doc_id"] for r in spark.read.parquet(str(out / "deletes")).collect()] == ["b"]
+
+    src = tmp_path / "src"
+    batch.write.parquet(str(src))
+    counts = []
+    q = (
+        spark.readStream.schema(batch.schema).parquet(str(src))
+        .writeStream.foreachBatch(
+            lambda b, _: counts.append(apply_consumer_batch(sink, b, spec, doc_schema))
+        )
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        assert q.awaitTermination(120), "the micro-batch never finished"
+    finally:
+        q.stop()
+    assert counts == [{"success": 4, "failed": 1}]
 
 
 from hypothesis import given, settings, strategies as st  # noqa: E402

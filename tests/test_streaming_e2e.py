@@ -9,6 +9,7 @@ from __future__ import annotations
 import json
 import threading
 import time
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -134,10 +135,10 @@ def test_streaming_loopback(spark, tmp_path):
     table.init(spark.createDataFrame([], DOC_SCHEMA))
     spec = cfg.consumers[0]
     rec_stream = topic_source(spark, cfg, spec, str(sink_dir))
-    consumer_stats: dict = {}
+    consumer_stats: Counter = Counter()
     cq = consumer_job(
         spark, spec, rec_stream, table, DOC_SCHEMA, str(tmp_path / "ckpt_c"),
-        stats=consumer_stats,
+        stats=consumer_stats.update,
     )
     try:
         # expected: 20 inserts + the resumed "99", evens updated to
@@ -374,7 +375,8 @@ def test_main_change_streams_two_topics(spark, tmp_path, capsys):
     """The daemon's change-stream path through main(): two namespaces
     under a topic prefix go through one producer query into the
     loopback; one consumer subscribed to both topics merges them into
-    its keyed table; the stats listener logs the producer counters."""
+    its keyed table; the stats listener logs the producer and consumer
+    counters."""
     from route81_spark.main import main
 
     for coll in ("a", "b"):
@@ -397,6 +399,7 @@ def test_main_change_streams_two_topics(spark, tmp_path, capsys):
         """
 change-stream-namespaces = ["test.a", "test.b"]
 topic-name-prefix = "demo"
+stats-duration = "0s"
 
 [[consumer]]
 namespace = "test.target"
@@ -413,21 +416,32 @@ bulk-flush-duration = "1s"
         "--tables-out", str(tmp_path / "tables"),
     ]
     # the daemon runs until its queries stop: stop them once the table
-    # reaches its final state (or the wait gives up)
+    # reaches its final state and the stats log counts all 12 records
+    # consumed (or the wait gives up)
     rc = []
     daemon = threading.Thread(target=lambda: rc.append(main(argv)))
     daemon.start()
     want = {"a0": 0, "a1": 10, "a3": 3, "b0": 0, "b1": 10, "b3": 3}
+    out = []
+
+    def done():
+        out.append(capsys.readouterr().out)
+        return (
+            "'consumer_success': 12, 'consumer_failed': 0" in "".join(out)
+            and {r["_id"]: r["i"] for r in table.read().collect()} == want
+        )
+
     try:
-        _await(lambda: {r["_id"]: r["i"] for r in table.read().collect()} == want)
+        _await(done)
     finally:
         for q in spark.streams.active:
             q.stop()
         daemon.join(timeout=60)
     assert not daemon.is_alive() and rc == [0]
     assert {r["_id"]: r["i"] for r in table.read().collect()} == want
-    log = capsys.readouterr().out
+    log = "".join(out) + capsys.readouterr().out
     assert "route81_spark stats:" in log and "'inserted': 8" in log
+    assert "'consumer_success': 12, 'consumer_failed': 0" in log
 
 
 def test_effective_bootstrap_flag_or_toml():
